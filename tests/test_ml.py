@@ -9,6 +9,8 @@ import math
 
 import numpy as np
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
@@ -200,6 +202,55 @@ def test_dtw_path_is_valid_warping():
     # identical series → diagonal path
     diag = _dtw_path(a, a)
     assert diag == [(i, i) for i in range(len(a))]
+
+
+def _dtw_rows_reference(a, b):
+    """The row-by-row DTW recurrence and backtrack the anti-diagonal
+    kernel replaced, kept verbatim as the bit-identity reference."""
+    n, m = len(a), len(b)
+    cost = np.abs(a[:, None] - b[None, :])
+    acc = np.full((n + 1, m + 1), np.inf)
+    acc[0, 0] = 0.0
+    for i in range(1, n + 1):
+        row = cost[i - 1]
+        prev = acc[i - 1]
+        cur = acc[i]
+        for j in range(1, m + 1):
+            cur[j] = row[j - 1] + min(prev[j], cur[j - 1], prev[j - 1])
+    path = []
+    i, j = n, m
+    while i > 0 and j > 0:
+        path.append((i - 1, j - 1))
+        moves = ((acc[i - 1, j - 1], i - 1, j - 1), (acc[i - 1, j], i - 1, j), (acc[i, j - 1], i, j - 1))
+        _, i, j = min(moves)
+    path.reverse()
+    return acc, path
+
+
+@st.composite
+def _dtw_pairs(draw):
+    """Two series of lengths 1..250 (equal half the time), values on a
+    0.1 grid in [-2, 2] so equal costs, and so ties in the min and in
+    the backtrack, are frequent."""
+    n = draw(st.integers(1, 250))
+    m = n if draw(st.booleans()) else draw(st.integers(1, 250))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    return rng.integers(-20, 21, n) / 10.0, rng.integers(-20, 21, m) / 10.0
+
+
+@settings(max_examples=300, deadline=None)
+@given(pair=_dtw_pairs())
+@example(pair=(np.zeros(1), np.zeros(1)))
+@example(pair=(np.arange(250) % 7 / 10.0, np.arange(250) % 5 / 10.0))
+@example(pair=(np.arange(250) % 3 / 10.0, np.arange(1) / 10.0))
+def test_dtw_wavefront_bit_identical_to_row_loop(pair):
+    from the_framework_for_clustering_time_series_data_spark.operators.align import _dtw_acc, _dtw_path
+
+    a, b = pair
+    acc_ref, path_ref = _dtw_rows_reference(a, b)
+    acc = _dtw_acc(a, b)
+    assert acc.shape == acc_ref.shape and acc.tobytes() == acc_ref.tobytes()
+    assert _dtw_path(a, b) == path_ref
 
 
 # --- imaging ---------------------------------------------------------------

@@ -74,6 +74,104 @@ def test_pipeline_end_to_end(spark, csv_fixture):
     assert {r["series_id"] for r in raw_rows} == {sid0}
 
 
+def _fitted(spark, csv_fixture, k=3):
+    from the_framework_for_clustering_time_series_data_spark.pipeline import TimeSeriesPipeline
+
+    pipe = TimeSeriesPipeline(spark).load_csv(csv_fixture, value_col="V", process_col="P")
+    pipe.preprocess()
+    pipe.align("truncation")
+    pipe.embed("pca")
+    pipe.cluster("kmeans", k=k)
+    return pipe
+
+
+def _assert_click_is_traceback_join(pipe, x, y, tol=1e-6):
+    """A facade click returns exactly raw ⋈ trace.traceback(embedding);
+    returns the clicked series ids."""
+    from the_framework_for_clustering_time_series_data_spark.operators import trace
+
+    ids = trace.traceback(pipe.embedding, x, y, tol).select("series_id")
+    want = pipe.raw.join(ids, "series_id")
+    got = pipe.trace(x, y, tol)
+    assert got.columns == want.columns
+    rows = sorted(map(tuple, got.collect()))
+    assert rows == sorted(map(tuple, want.collect()))
+    return {r[0] for r in rows}
+
+
+def test_trace_click_matches_traceback_join(spark, csv_fixture):
+    pipe = _fitted(spark, csv_fixture)
+    pts = [(r["series_id"], r["x"], r["y"]) for r in pipe.embedding.collect()]
+    # hit: one plotted point
+    sid, x, y = pts[0]
+    assert _assert_click_is_traceback_join(pipe, x, y) == {sid}
+    # miss: an empty frame
+    assert _assert_click_is_traceback_join(pipe, 1e9, -1e9) == set()
+    # two series within tol of one point: the closest pair on both axes
+    (_, ax, ay), (_, bx, by) = min(
+        ((p, q) for i, p in enumerate(pts) for q in pts[i + 1:]),
+        key=lambda pq: max(abs(pq[0][1] - pq[1][1]), abs(pq[0][2] - pq[1][2])),
+    )
+    gap = max(abs(ax - bx), abs(ay - by))
+    assert len(_assert_click_is_traceback_join(pipe, ax, ay, gap * 1.5)) >= 2
+    # a point exactly tol away on an axis is outside: the test is strict
+    assert len(_assert_click_is_traceback_join(pipe, ax, ay, gap)) == 1
+
+
+def test_trace_click_is_one_job_without_broadcast(spark, csv_fixture):
+    pipe = _fitted(spark, csv_fixture)
+    (sid, x, y), (sid2, x2, y2) = [
+        (r["series_id"], r["x"], r["y"]) for r in pipe.embedding.orderBy("series_id").take(2)
+    ]
+    pipe.trace(x, y).collect()  # the first click after embed() builds the point index
+    sc = spark.sparkContext
+    sc.setJobGroup("trace-click-test", "one facade click")
+    try:
+        click = pipe.trace(x2, y2)
+        rows = click.collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("trace-click-test")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert {r["series_id"] for r in rows} == {sid2}
+    assert len(jobs) == 1
+    assert "BroadcastExchange" not in click._jdf.queryExecution().executedPlan().toString()
+
+
+def test_refit_rebuilds_click_index_and_cluster_tab(spark, csv_fixture):
+    from the_framework_for_clustering_time_series_data_spark.operators import trace
+
+    def assert_tab_matches_operators():
+        cents = trace.centroids(pipe.embedding, pipe.predictions)
+        reps = trace.representatives(pipe.embedding, pipe.predictions)
+        assert sorted(map(tuple, pipe.centroids().collect())) == sorted(map(tuple, cents.collect()))
+        assert sorted(map(tuple, pipe.representatives().collect())) == sorted(map(tuple, reps.collect()))
+
+    pipe = _fitted(spark, csv_fixture, k=3)
+    cents, reps = pipe.centroids(), pipe.representatives()
+    assert pipe.centroids() is cents and pipe.representatives() is reps  # memoized per fit
+    assert cents.count() == 3 and reps.count() == 3
+    assert_tab_matches_operators()
+
+    pipe.cluster("kmeans", k=2)  # a new k: the tab is rebuilt
+    assert pipe.centroids() is not cents and pipe.representatives() is not reps
+    assert pipe.centroids().count() == 2 and pipe.representatives().count() == 2
+    assert_tab_matches_operators()
+
+    old = pipe.embedding.orderBy("series_id").first()
+    _assert_click_is_traceback_join(pipe, old["x"], old["y"])  # builds the index
+    pipe.align("padding")  # different coordinates for every series
+    pipe.embed("pca")
+    tab = pipe.centroids()
+    pipe.cluster("kmeans", k=2)
+    assert pipe.centroids() is not tab
+    assert_tab_matches_operators()
+    new = pipe.embedding.orderBy("series_id").first()
+    assert (new["x"], new["y"]) != (old["x"], old["y"])
+    assert _assert_click_is_traceback_join(pipe, new["x"], new["y"]) == {new["series_id"]}
+    _assert_click_is_traceback_join(pipe, old["x"], old["y"])
+
+
 def test_pipeline_sliding_window_path(spark, csv_fixture):
     from the_framework_for_clustering_time_series_data_spark.pipeline import TimeSeriesPipeline
 

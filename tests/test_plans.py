@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import re
 
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_ORACLE
@@ -980,3 +982,43 @@ def test_sbd_topk_keeps_equi_keyed_pair_join(spark):
     )
     assert m, "pair join lost the shifted-day equi key"
     assert m.group(1) == m.group(2) == "2"
+
+
+# --- literal-array helpers ----------------------------------------------------
+
+_EDGE_DOUBLES = [0.0, -0.0, 5e-324, -5e-324, 2.2250738585072014e-308, 1.5e-310,
+                 float("nan"), float("inf"), float("-inf"), 1.7976931348623157e308, 0.1]
+
+
+def _bits(v):
+    import struct
+
+    return "nan" if v != v else struct.pack("<d", v)  # NaN payloads aside, bit for bit
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    doubles=st.lists(st.one_of(st.sampled_from(_EDGE_DOUBLES), st.floats()), max_size=24),
+    longs=st.lists(st.integers(-(2**63), 2**63 - 1), max_size=24),
+)
+def test_lit_arrays_equal_per_element_lit_form(spark, doubles, longs):
+    """lit_double_array / lit_long_array (one SQL-string literal) carry
+    the same values as the per-element F.array(F.lit(v), ...) form:
+    -0.0, subnormals, NaN and ±inf included."""
+    from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import (
+        lit_double_array,
+        lit_long_array,
+    )
+
+    df = spark.range(1).select(
+        lit_double_array(doubles).alias("d"),
+        F.array(*[F.lit(v) for v in doubles]).alias("d_ref"),
+        lit_long_array(longs).alias("l"),
+        F.array(*[F.lit(v) for v in longs]).alias("l_ref"),
+    )
+    # an empty list is array<void>, as F.array() is
+    assert not doubles or df.schema["d"].dataType.simpleString() == "array<double>"
+    assert not longs or df.schema["l"].dataType.simpleString() == "array<bigint>"
+    row = df.first()
+    assert [_bits(v) for v in row["d"]] == [_bits(v) for v in row["d_ref"]] == [_bits(v) for v in doubles]
+    assert row["l"] == row["l_ref"] == longs

@@ -96,10 +96,14 @@ def lit_double_array(values):
     64-dim probe expression burned ~1000 round trips of pure driver
     time per plan BUILD (round-13 diagnosis: the sim family's bench
     cost was mostly construction, not execution — guide §7.3). Parsing
-    one ``array(1.0D, …)`` SQL string JVM-side yields the IDENTICAL
-    Literal array: ``repr(float)`` is the shortest round-trip decimal
-    and Java's double parse is correctly rounded, so values are
-    bit-identical (asserted in tests/test_plans.py)."""
+    one ``array(1.0D, …)`` SQL string JVM-side yields the same values:
+    ``repr(float)`` is the shortest round-trip decimal and Java's double
+    parse is correctly rounded, so values are bit-identical, -0.0 and
+    subnormals included (asserted in tests/test_plans.py). For finite
+    values the analyzed expression is the same ``array(literal, …)``;
+    NaN and ±inf are spelled ``CAST('NaN' AS DOUBLE)`` etc., which the
+    analyzed plan keeps as casts and constant folding turns into the
+    same literal array."""
     import math
 
     from pyspark.sql import functions as F

@@ -123,7 +123,8 @@ def dtw_stretch_align(df: DataFrame) -> DataFrame:
     unchanged (identity branch, app.py:322-323).
 
     The reference uses fastdtw (approximate); we compute the exact
-    O(n·m) DTW path in NumPy inside an ``applyInPandas`` per series —
+    O(n·m) DTW path in NumPy (one vectorized step per anti-diagonal,
+    :func:`_dtw_acc`) inside a ``mapInPandas`` over series batches —
     per-series work is embarrassingly parallel across executors; the
     longest series is broadcast via closure.
 
@@ -179,27 +180,53 @@ def dtw_stretch_align(df: DataFrame) -> DataFrame:
     )
 
 
-def _dtw_path(a, b):
-    """Exact DTW optimal path between 1-D arrays (cost = |a_i - b_j|),
-    standard O(n·m) dynamic program with backtracking.
+def _dtw_acc(a, b):
+    """Accumulated-cost matrix of the exact DTW between 1-D arrays
+    (cost = |a_i - b_j|): ``acc[i, j] = cost[i-1, j-1] + min(acc[i-1, j],
+    acc[i, j-1], acc[i-1, j-1])`` with ``acc[0, 0] = 0`` and an infinite
+    border, shape ``(n + 1, m + 1)``.
+
+    Filled by anti-diagonals: every cell of diagonal ``d = i + j``
+    depends only on diagonals ``d - 1`` and ``d - 2``, so each diagonal
+    is one vectorized NumPy step instead of a Python loop over cells.
+    In the row-major flat view, cell ``(i, j)`` sits at ``i*m + d``, so
+    a diagonal is a slice with stride ``m`` and its up/left/diagonal
+    neighbours are the same slice shifted back by ``m + 1``, 1 and
+    ``m + 2``. Each cell computes the same ``cost + min(...)`` as the
+    row-by-row recurrence, so for finite inputs the matrix is
+    bit-identical to it.
     """
     import numpy as np
 
     n, m = len(a), len(b)
-    cost = np.abs(a[:, None] - b[None, :])
-    acc = np.full((n + 1, m + 1), np.inf)
+    w = m + 1
+    cost = np.zeros((n + 1, w))
+    cost[1:, 1:] = np.abs(np.asarray(a, dtype=np.float64)[:, None] - np.asarray(b, dtype=np.float64)[None, :])
+    acc = np.full((n + 1, w), np.inf)
     acc[0, 0] = 0.0
-    for i in range(1, n + 1):
-        row = cost[i - 1]
-        prev = acc[i - 1]
-        cur = acc[i]
-        for j in range(1, m + 1):
-            cur[j] = row[j - 1] + min(prev[j], cur[j - 1], prev[j - 1])
+    if not (n and m):
+        return acc
+    c, f = cost.ravel(), acc.ravel()
+    for d in range(2, n + m + 1):
+        s = max(1, d - m) * m + d
+        e = min(n, d - 1) * m + d + 1
+        f[s:e:m] = c[s:e:m] + np.minimum(
+            np.minimum(f[s - w:e - w:m], f[s - 1:e - 1:m]), f[s - w - 1:e - w - 1:m]
+        )
+    return acc
+
+
+def _dtw_path(a, b):
+    """Exact DTW optimal path between 1-D arrays (cost = |a_i - b_j|):
+    the :func:`_dtw_acc` dynamic program, then backtracking from the
+    corner (ties → the smaller ``(i, j)``, so the diagonal first).
+    """
+    acc = _dtw_acc(a, b).tolist()
     path = []
-    i, j = n, m
+    i, j = len(a), len(b)
     while i > 0 and j > 0:
         path.append((i - 1, j - 1))
-        moves = ((acc[i - 1, j - 1], i - 1, j - 1), (acc[i - 1, j], i - 1, j), (acc[i, j - 1], i, j - 1))
+        moves = ((acc[i - 1][j - 1], i - 1, j - 1), (acc[i - 1][j], i - 1, j), (acc[i][j - 1], i, j - 1))
         _, i, j = min(moves)
     path.reverse()
     return path

@@ -34,14 +34,17 @@ def centroids(emb: DataFrame, pred: DataFrame) -> DataFrame:
     )
 
 
-def representatives(emb: DataFrame, pred: DataFrame) -> DataFrame:
+def representatives(emb: DataFrame, pred: DataFrame, cents: DataFrame | None = None) -> DataFrame:
     """T2 — per cluster, the member closest to its centroid
     (app.py:1018-1033's O(k·n) scan → broadcast join + windowed top-1).
 
     Ties broken by series_id for determinism (the reference keeps the
-    first scan hit, which is positional and nondeterministic).
+    first scan hit, which is positional and nondeterministic). ``cents``
+    is ``centroids(emb, pred)``, computed here unless the caller
+    already holds it.
     """
-    cents = centroids(emb, pred)
+    if cents is None:
+        cents = centroids(emb, pred)
     joined = (
         emb.join(pred, "series_id")
         .where(F.col("prediction") != F.lit(-1))

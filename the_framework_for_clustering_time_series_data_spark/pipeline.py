@@ -3,9 +3,21 @@ reference's three-tab Dash workflow and its ~25 module globals
 (/root/reference/app.py:94-123, SURVEY.md §3).
 
 Each stage returns a DataFrame keyed by ``series_id``; lineage/
-traceback is always an equi-join on the key (never positional). The
+traceback always resolves to the key (never positional). The
 reference's per-stage memoization (S3) becomes explicit ``.cache()``
 on the stage outputs.
+
+The interactive session fits once, renders the cluster tab, then
+clicks plotted points. Two pieces of per-fit state keep those calls
+cheap:
+
+  * the cluster tab (``centroids()``, ``representatives()`` and, on
+    top of those, ``representative_series()``) is computed once per
+    ``cluster()`` and cached; ``embed()`` or ``cluster()`` drops it;
+  * ``trace(x, y)`` resolves a click against a driver-side
+    ``(series_id, x, y)`` point index — one collect of the cached
+    embedding on the first click after ``embed()``, which drops it —
+    so each click is one filter job on the raw rows.
 
     pipe = TimeSeriesPipeline(spark)
     pipe.load_csv(path, value_col="V", process_col="P")   # or load_events
@@ -16,7 +28,7 @@ on the stage outputs.
     pipe.cluster("kmeans", k=4)            # C1 | C2 "dbscan" | C3 "kshape"
     pipe.representatives()                 # T1+T2
     pipe.outliers()                        # T4 (DBSCAN)
-    pipe.trace(series_id=...)              # T3: raw rows for one series
+    pipe.trace(x, y)                       # T3: raw rows of a plotted point
 """
 
 from __future__ import annotations
@@ -37,6 +49,8 @@ class TimeSeriesPipeline:
         self.predictions: DataFrame | None = None  # (series_id, prediction)
         self.pca_variance: list[float] | None = None
         self._det_assign: DataFrame | None = None  # (id, v, cell, d2) md5lloyd
+        self._points: list[tuple] | None = None    # trace() index, per embed()
+        self._tab: dict[str, DataFrame] = {}       # cluster-tab memo, per cluster()
 
     # --- sources (S1/S2) ---------------------------------------------------
 
@@ -107,6 +121,8 @@ class TimeSeriesPipeline:
         else:
             raise ValueError(f"unknown embed method {method!r}")
         self.embedding = out.cache()
+        self._points = None
+        self._drop_tab()
         return self.embedding
 
     # --- clustering (C1-C4) --------------------------------------------------
@@ -158,6 +174,7 @@ class TimeSeriesPipeline:
         else:
             raise ValueError(f"unknown cluster method {method!r}")
         self.predictions = out.cache()
+        self._drop_tab()
         return self.predictions
 
     def det_assignments(self) -> DataFrame:
@@ -184,13 +201,28 @@ class TimeSeriesPipeline:
 
     # --- post-clustering (T1-T5) ----------------------------------------------
 
-    def centroids(self) -> DataFrame:
+    def _drop_tab(self):
+        for df in self._tab.values():
+            df.unpersist()
+        self._tab = {}
+
+    def _memo(self, name: str, build) -> DataFrame:
+        """The cluster tab's frame ``name``, built and cached once per
+        ``cluster()``."""
         self._require("predictions", ".cluster(...)")
-        return trace.centroids(self.embedding, self.predictions)
+        if name not in self._tab:
+            self._tab[name] = build().cache()
+        return self._tab[name]
+
+    def centroids(self) -> DataFrame:
+        """T1 — (prediction, cx, cy, n_members), memoized per fit."""
+        return self._memo("centroids", lambda: trace.centroids(self.embedding, self.predictions))
 
     def representatives(self) -> DataFrame:
-        self._require("predictions", ".cluster(...)")
-        return trace.representatives(self.embedding, self.predictions)
+        """T2 — (prediction, series_id, x, y, dist), memoized per fit
+        and ranked against the memoized centroids."""
+        return self._memo("representatives", lambda: trace.representatives(
+            self.embedding, self.predictions, cents=self.centroids()))
 
     def outliers(self) -> DataFrame:
         self._require("predictions", ".cluster(...)")
@@ -201,7 +233,8 @@ class TimeSeriesPipeline:
         representative series' raw points, LTTB-downsampled to
         ``max_points`` so a dashboard renders O(max_points) per cluster
         at any corpus size (the reference plots representatives
-        wholesale, app.py:1018-1033 + figure callbacks). Returns
+        wholesale, app.py:1018-1033 + figure callbacks). Reads the
+        memoized ``representatives()``. Returns
         (prediction, series_id, bucket, v, pick)."""
         self._require("predictions", ".cluster(...)")
         from the_framework_for_clustering_time_series_data_spark.operators.resample import lttb_downsample
@@ -218,10 +251,27 @@ class TimeSeriesPipeline:
         )
 
     def trace(self, x: float, y: float, tol: float = 1e-6) -> DataFrame:
-        """T3 — coordinate → raw series rows."""
+        """T3 — plotted coordinate → the raw rows of every series whose
+        embedded point lies within ``tol`` of it on both axes: the same
+        ``abs(x - px) < tol AND abs(y - py) < tol`` test as
+        ``trace.traceback``, in float64.
+
+        The test runs on the driver against a ``(series_id, x, y)``
+        index of the embedding, collected once on the first click after
+        ``embed()`` (one point per series, like the reference's plotted
+        arrays, app.py:958-973). The click itself is one filter job
+        ``raw.where(series_id IN hits)``: no join, no broadcast, and an
+        empty frame for a miss.
+        """
         self._require("embedding", ".embed(...)")
-        ids = trace.traceback(self.embedding, x, y, tol).select("series_id")
-        return self.raw.join(F.broadcast(ids), "series_id")
+        if self._points is None:
+            self._points = [
+                tuple(r) for r in self.embedding.select("series_id", "x", "y").collect()
+                if r["x"] is not None and r["y"] is not None
+            ]
+        x, y, tol = float(x), float(y), float(tol)
+        hits = [sid for sid, px, py in self._points if abs(x - px) < tol and abs(y - py) < tol]
+        return self.raw.where(F.col("series_id").isin(hits))
 
     # --- sinks (K1/K2) ---------------------------------------------------------
 
